@@ -40,6 +40,11 @@ def prepare_env() -> None:
         p for p in (str(ROOT), os.environ.get("PYTHONPATH", "")) if p)
     os.environ["SPARK_LOCAL_DIRS"] = str(WORK / "spark-local")
     os.environ["TMPDIR"] = str(WORK / "tmp")
+    # every JVM (the spark-submit launcher too): temp files in the work
+    # dir, and no hsperfdata file under /tmp
+    os.environ["JAVA_TOOL_OPTIONS"] = " ".join(
+        p for p in (os.environ.get("JAVA_TOOL_OPTIONS", ""), "-XX:-UsePerfData",
+                    f"-Djava.io.tmpdir={WORK / 'tmp'}") if p)
     os.environ["SPARK_DRIVER_MEMORY"] = driver_memory()
     # the CLI verb calls get_spark() with no cores; this keeps its session
     # settings (shuffle width) equal to the benchmark's
@@ -54,7 +59,6 @@ def start_session(event_log: bool):
     conf = {
         "spark.ui.showConsoleProgress": "false",
         "spark.sql.warehouse.dir": str(WORK / "warehouse"),
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={WORK / 'tmp'}",
     }
     if event_log:
         conf.update({
